@@ -16,6 +16,10 @@ Update patterns implemented:
 - ``drop_if_exists``        → K6 (DROP TABLE IF EXISTS)
 - ``skip_if_present``       → the count-check guards
   (dags/mitma/bronze_mitma.py:38-47, dags/mitma/silver_mitma.py:17-24)
+
+Driver-side rows (bootstrap empties, ledger rows, small dimensions) enter
+Spark through ``local_frame``, which hands Catalyst a ``LocalRelation``
+built from Arrow, so writing them runs no Python-worker tasks.
 """
 
 from __future__ import annotations
@@ -26,6 +30,23 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """DataFrame over driver-side ``rows`` as a JVM-local ``LocalRelation``.
+
+    ``createDataFrame(<list>)`` pickles the rows into a Python RDD whose
+    every task waits on a Python worker; an Arrow table is shipped once to
+    the JVM instead, and its write runs as a plain ``LocalTableScan``.
+    Naive ``datetime`` values are read as UTC, where ``createDataFrame``
+    on a list reads them in the process's local time zone."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def zorder_expr(x_col: str, y_col: str, bits: int = 16) -> str:
@@ -77,7 +98,7 @@ class Warehouse:
     # --- sinks -------------------------------------------------------------
     def create_if_not_exists(self, name: str, schema: T.StructType, partition_by: list[str] | None = None) -> None:
         if not self.table_exists(name):
-            empty = self.spark.createDataFrame([], schema)
+            empty = local_frame(self.spark, [], schema)
             w = empty.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)

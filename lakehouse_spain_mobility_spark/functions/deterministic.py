@@ -253,10 +253,6 @@ def spark_davg(expr: str) -> str:
     return f"({spark_dsum(expr)} / COUNT({expr}))"
 
 
-def spark_micro(expr: str) -> str:
-    return f"CAST(ROUND(({expr}) * 1000000.0) AS BIGINT)"
-
-
 def spark_dstddev_samp(expr: str) -> str:
     s1 = spark_dsum(expr)
     s2 = spark_dsum(f"({expr}) * ({expr})")
@@ -336,15 +332,6 @@ def xdsum(expr: str) -> Column:
 
 def xdavg(expr: str) -> Column:
     return F.expr(spark_davg(expr))
-
-
-def xmicro_dsum(expr: str) -> Column:
-    """The common output composition ``micro(dsum(x))`` as one F.expr."""
-    return F.expr(spark_micro(spark_dsum(expr)))
-
-
-def xmicro_davg(expr: str) -> Column:
-    return F.expr(spark_micro(spark_davg(expr)))
 
 
 def xdstddev_samp0(expr: str) -> Column:

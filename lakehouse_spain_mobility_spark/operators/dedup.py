@@ -251,7 +251,7 @@ def docs_fit_broadcast(sf_dir: str, table: str = "documents", cap: int = BCAST_D
     for f in files:
         try:
             total += _pq.ParquetFile(f).metadata.num_rows
-        except OSError:
+        except (OSError, ValueError):  # ValueError: pyarrow ArrowInvalid
             return False
         if total > cap:
             return False

@@ -32,8 +32,12 @@ def connected_components(
     count aggregate — a scalar action per iteration, like the k-means
     shift test). Labels initialize at the round-1 state (see below), so
     ``max_iter`` bounds the rounds AFTER the first; total propagation
-    depth is ``max_iter + 1``.
+    depth is ``max_iter + 1``. ``max_iter < 1`` raises ``ValueError``: with
+    no loop round the convergence check never runs, and the round-1 labels
+    would come back as if converged.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

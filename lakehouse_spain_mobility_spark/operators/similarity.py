@@ -69,10 +69,6 @@ def norm2_unrolled(a: Column, dim: int) -> Column:
     return F.sqrt(expr)
 
 
-def cosine_unrolled(a: Column, b: Column, dim: int) -> Column:
-    return dot_unrolled(a, b, dim) / (norm2_unrolled(a, dim) * norm2_unrolled(b, dim))
-
-
 @lru_cache(maxsize=64)
 def _dot_unrolled_sql(a: str, b: str, dim: int) -> str:
     return " + ".join(

@@ -272,15 +272,6 @@ def st_centroid(wkt: pd.Series) -> pd.DataFrame:
     )
 
 
-@F.pandas_udf(T.BooleanType())
-def st_is_valid(wkt: pd.Series) -> pd.Series:
-    out = []
-    for w in wkt:
-        rings = parse_polygon_rings(w)
-        out.append(bool(rings) and ring_is_valid(rings[0]))
-    return pd.Series(out)
-
-
 @F.pandas_udf(T.DoubleType())
 def st_area(wkt: pd.Series) -> pd.Series:
     out = []

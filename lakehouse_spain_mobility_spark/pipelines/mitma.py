@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, local_frame
 from ..functions import scalar
 from ..functions.holidays_es import holidays_rows
 from ..operators.outlier_stats import sigma_filtered_stats_window
@@ -52,6 +52,21 @@ BRONZE_SCHEMA = T.StructType(
     + [T.StructField("ingestion_date", T.TimestampType())]
 )
 
+LEDGER_ROW_SCHEMA = T.StructType(
+    [
+        T.StructField("file_date", T.StringType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("status", T.StringType()),
+    ]
+)
+LEDGER_SCHEMA = T.StructType(
+    LEDGER_ROW_SCHEMA.fields + [T.StructField("ingested_at", T.TimestampType())]
+)
+
+HOLIDAYS_SCHEMA = T.StructType(
+    [T.StructField("date", T.DateType()), T.StructField("is_holiday", T.BooleanType())]
+)
+
 SILVER_SCHEMA = T.StructType(
     [
         T.StructField("date", T.DateType()),
@@ -67,24 +82,9 @@ SILVER_SCHEMA = T.StructType(
 def ensure_tables(wh: Warehouse) -> None:
     """K1 idempotent bootstrap (dags/mitma/bronze_mitma.py:7-26 etc.)."""
     wh.create_if_not_exists(BRONZE_TABLE, BRONZE_SCHEMA)
-    wh.create_if_not_exists(
-        LEDGER_TABLE,
-        T.StructType(
-            [
-                T.StructField("file_date", T.StringType()),
-                T.StructField("n_rows", T.LongType()),
-                T.StructField("status", T.StringType()),
-                T.StructField("ingested_at", T.TimestampType()),
-            ]
-        ),
-    )
+    wh.create_if_not_exists(LEDGER_TABLE, LEDGER_SCHEMA)
     wh.create_if_not_exists(SILVER_TABLE, SILVER_SCHEMA, partition_by=["date"])
-    wh.create_if_not_exists(
-        HOLIDAYS_TABLE,
-        T.StructType(
-            [T.StructField("date", T.DateType()), T.StructField("is_holiday", T.BooleanType())]
-        ),
-    )
+    wh.create_if_not_exists(HOLIDAYS_TABLE, HOLIDAYS_SCHEMA)
 
 
 def ingest_holidays(wh: Warehouse, years: list[int]) -> None:
@@ -97,9 +97,7 @@ def ingest_holidays(wh: Warehouse, years: list[int]) -> None:
     ]
     if not new_years:
         return
-    rows = holidays_rows(new_years)
-    df = wh.spark.createDataFrame(rows, "date date, is_holiday boolean")
-    wh.append(HOLIDAYS_TABLE, df)
+    wh.append(HOLIDAYS_TABLE, local_frame(wh.spark, holidays_rows(new_years), HOLIDAYS_SCHEMA))
 
 
 def ingest_bronze(wh: Warehouse, raw: DataFrame, file_date: str) -> bool:
@@ -123,8 +121,8 @@ def ingest_bronze(wh: Warehouse, raw: DataFrame, file_date: str) -> bool:
     )
     wh.append(BRONZE_TABLE, out)
     n = wh.count_where(BRONZE_TABLE, F.col("date") == file_date)
-    ledger_row = wh.spark.createDataFrame(
-        [(file_date, n, "ingested")], "file_date string, n_rows bigint, status string"
+    ledger_row = local_frame(
+        wh.spark, [(file_date, n, "ingested")], LEDGER_ROW_SCHEMA
     ).withColumn("ingested_at", F.current_timestamp())
     wh.append(LEDGER_TABLE, ledger_row)
     return True

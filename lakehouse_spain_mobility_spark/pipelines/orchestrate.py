@@ -29,18 +29,25 @@ import traceback
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, local_frame
 
 RUN_LEDGER = "task_run_ledger"
-_SCHEMA = (
-    "task string, key string, attempt int, status string, error string"
+_SCHEMA = T.StructType(
+    [
+        T.StructField("task", T.StringType()),
+        T.StructField("key", T.StringType()),
+        T.StructField("attempt", T.IntegerType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("error", T.StringType()),
+    ]
 )
 
 
 def _record(wh: Warehouse, task: str, key: str, attempt: int, status: str, error: str | None) -> None:
-    row = wh.spark.createDataFrame(
-        [(task, key, attempt, status, (error or "")[:2000])], _SCHEMA
+    row = local_frame(
+        wh.spark, [(task, key, attempt, status, (error or "")[:2000])], _SCHEMA
     ).withColumn("ts", F.current_timestamp())
     if wh.table_exists(RUN_LEDGER):
         wh.append(RUN_LEDGER, row)

@@ -19,14 +19,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def full_explain(df: DataFrame) -> str:
-    return df._jdf.queryExecution().toString()
-
-
 def count_broadcast_joins(df: DataFrame) -> int:
     return len(re.findall(r"BroadcastHashJoin", executed_plan(df)))
 

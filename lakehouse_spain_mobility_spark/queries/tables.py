@@ -65,7 +65,7 @@ def parquet_num_rows(sf_dir: str, name: str) -> int | None:
     for f in files:
         try:
             total += _pq.ParquetFile(f).metadata.num_rows
-        except OSError:
+        except (OSError, ValueError):  # ValueError: pyarrow ArrowInvalid
             return None
     return total
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_spain_mobility_spark.functions import holidays_es, scalar
@@ -111,6 +112,15 @@ def test_connected_components_deep_chain(spark):
     edges = spark.createDataFrame(chain + [(9, 9)], "d1 bigint, d2 bigint")
     got = {r["vertex"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {**{v: 1 for v in range(1, 8)}, 9: 9}
+
+
+def test_connected_components_rejects_max_iter_below_one():
+    """The fused init is round 1, so max_iter=0 would skip the convergence
+    check and return round-1 labels as final."""
+    from lakehouse_spain_mobility_spark.operators.graph import connected_components
+
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(None, max_iter=0)
 
 
 def test_from_json_matches_get_json_object(spark):

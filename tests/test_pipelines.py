@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import fixtures as fx
-from lakehouse_spain_mobility_spark.catalog import Warehouse
-from lakehouse_spain_mobility_spark.pipelines import economy, geometry, gravity_bq, mitma, population
+from lakehouse_spain_mobility_spark.catalog import Warehouse, local_frame
+from lakehouse_spain_mobility_spark.functions.holidays_es import holidays_rows
+from lakehouse_spain_mobility_spark.pipelines import economy, geometry, gravity_bq, mitma, orchestrate, population
 from lakehouse_spain_mobility_spark.sources.csv import read_csv_inferred
 
 
@@ -269,6 +270,91 @@ def test_orchestration_retries_and_backfill(spark, tmp_path):
     statuses4 = backfill(wh, "daily", ["d2"], task, max_retries=0)
     assert statuses4 == {"d2": "skipped"}
     assert ran == []  # cured key never re-executed the (poison) task
+
+
+def _leaf_relations(df) -> set[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+
+
+def test_write_path_small_frames_are_local_relations(spark, tmp_path, monkeypatch):
+    """The bootstrap empties, the holiday rows, the bronze-ledger row and
+    the run-ledger row reach the writer as JVM-local LocalRelations, not
+    pickled Python RDDs (LogicalRDD) whose write tasks each wait on a
+    Python worker."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written: dict[str, list[set[str]]] = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.setdefault(path.rsplit("/", 1)[-1], []).append(_leaf_relations(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    date, rows = sorted(fx.mitma_bronze_rows().items())[0]
+    mitma.ensure_tables(wh)
+    mitma.ingest_holidays(wh, [int(date[:4])])
+    assert mitma.ingest_bronze(wh, spark.createDataFrame(rows, mitma.BRONZE_COLUMNS), date)
+    for _ in range(2):  # the first record creates the run ledger, the second appends
+        orchestrate.run_with_retries(wh, "ingest", date, lambda: None)
+
+    local = {"LocalRelation"}
+    bootstrap, file_rows = written.pop(mitma.BRONZE_TABLE)
+    assert bootstrap == local and file_rows != local  # the file's own rows are not driver-side
+    assert written == {
+        mitma.LEDGER_TABLE: [local, local],
+        mitma.SILVER_TABLE: [local],
+        mitma.HOLIDAYS_TABLE: [local, local],
+        orchestrate.RUN_LEDGER: [local, local],
+    }
+
+
+@pytest.mark.parametrize(
+    "schema, rows",
+    [
+        (mitma.HOLIDAYS_SCHEMA, holidays_rows([2023, 2024])),
+        (mitma.LEDGER_ROW_SCHEMA, [("20230101", 4807, "ingested"), ("20230102", 2**40, "ingested")]),
+        (
+            orchestrate._SCHEMA,
+            [
+                ("ingest", "20230101", 1, "retrying", "ValueError: poison file\nTraceback"),
+                ("ingest", "20230101", 2, "success", ""),
+            ],
+        ),
+        (mitma.BRONZE_SCHEMA, []),
+        (mitma.LEDGER_SCHEMA, []),
+        (mitma.SILVER_SCHEMA, []),
+        (mitma.HOLIDAYS_SCHEMA, []),
+    ],
+    ids=["holidays", "ledger_row", "run_ledger_row", "bronze_empty", "ledger_empty", "silver_empty", "holidays_empty"],
+)
+def test_local_frame_matches_create_dataframe(spark, schema, rows):
+    """local_frame is a drop-in for createDataFrame on the write path's
+    schemas: date, boolean, int vs bigint, the empty error string and
+    zero rows give the same rows and the same JVM-side schema."""
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    # select("*") re-reads the schema from the JVM instead of the cached one
+    assert got.select("*").schema == want.select("*").schema == schema
+    assert got.collect() == want.collect()
+
+
+def test_bootstrapped_empty_tables_read_back(spark, tmp_path):
+    """K1 bootstrap from zero-row local frames leaves readable tables with
+    their declared schema and no rows. (The date-partitioned silver holds
+    no partition, hence no footer, until its first replace.)"""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    mitma.ensure_tables(wh)
+    for name, schema in [
+        (mitma.BRONZE_TABLE, mitma.BRONZE_SCHEMA),
+        (mitma.LEDGER_TABLE, mitma.LEDGER_SCHEMA),
+        (mitma.HOLIDAYS_TABLE, mitma.HOLIDAYS_SCHEMA),
+    ]:
+        df = wh.read(name)
+        assert df.schema == schema and df.count() == 0, name
+    assert wh.table_exists(mitma.SILVER_TABLE)
 
 
 def test_report_rollup_gold_matches_end_to_end(spark):

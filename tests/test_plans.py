@@ -672,6 +672,27 @@ def test_capped_jaccard_pairs_broadcast_gate_paths_identical(spark):
     assert sorted(hinted.collect()) == sorted(unhinted.collect())
 
 
+def test_footer_probes_take_scale_safe_branch_on_truncated_footer(tmp_path):
+    """A truncated parquet footer raises pyarrow ArrowInvalid (a
+    ValueError, not an OSError): both footer probes must report "unknown"
+    so the caller takes its scale-safe branch instead of failing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakehouse_spain_mobility_spark.operators.dedup import docs_fit_broadcast
+    from lakehouse_spain_mobility_spark.queries.tables import parquet_num_rows
+
+    part = tmp_path / "documents.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), part)
+    assert parquet_num_rows(str(tmp_path), "documents") == 3
+    assert docs_fit_broadcast(str(tmp_path)) is True
+
+    part.write_bytes(part.read_bytes()[:-20])
+    assert parquet_num_rows(str(tmp_path), "documents") is None
+    assert docs_fit_broadcast(str(tmp_path)) is False
+
+
 def test_dedup_pipeline_array_verification_identical(spark):
     """r11 verification contract: dedup_pipeline's Jaccard check runs on
     per-candidate-doc shingle ARRAYS (size(array_intersect) in-row — group
