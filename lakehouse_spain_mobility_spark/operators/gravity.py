@@ -12,8 +12,7 @@ Spark-first changes vs the reference:
   most) are broadcast so the distance matrix never shuffles;
 - k is computed distributively and attached via crossJoin of a 1-row
   aggregate (no driver round-trip; the reference fetches the scalar into
-  Python and re-injects it as a SQL literal, calculate_gold.py:19-33 — a
-  ``collect``-based variant is kept for parity in :func:`calibrate_k`).
+  Python and re-injects it as a SQL literal, calculate_gold.py:19-33).
 """
 
 from __future__ import annotations
@@ -45,35 +44,22 @@ def assemble_gravity_data(
     return out
 
 
-def calibrate_k(gravity_data: DataFrame) -> float:
-    """Driver-side scalar calibration, the reference's exact shape
-    (dags/gravity/calculate_gold.py:11-19): grand aggregate → fetchone."""
-    row = gravity_data.filter(F.col("total_trips").isNotNull()).agg(
-        (
-            xdsum("total_trips * distance_km * distance_km")
-            / F.nullif(xdsum("population * avg_income"), F.lit(0.0))
-        ).alias("k")
-    ).first()
-    return row["k"]
-
-
-def gravity_analysis(gravity_data: DataFrame, cache: bool = True) -> DataFrame:
+def gravity_analysis(gravity_data: DataFrame) -> DataFrame:
     """Prediction + mismatch (dags/gravity/calculate_gold.py:23-45), with k
     attached distributively via a 1-row cross join instead of a driver
     round-trip.
 
-    ``cache=True`` materializes the feature table once (it feeds both the
-    k calibration and the output — a municipality²-sized frame, small even
-    at national scale) and cuts ~35% off the query; values are unchanged
-    either way thanks to deterministic aggregation.
+    The feature table is materialized once (it feeds both the k
+    calibration and the output — a municipality²-sized frame, small even
+    at national scale), which cuts ~35% off the query; values are the
+    same as an inline recompute thanks to deterministic aggregation.
     """
-    if cache:
-        # Lazy localCheckpoint: the k-calibration broadcast materializes it
-        # as part of its own job, saving the dedicated eager-checkpoint job
-        # (~half the query's bench wall-clock, PERF.md r3); unlike persist()
-        # it stays out of the cache manager (no cross-query plan
-        # substitution) and truncates lineage.
-        gravity_data = gravity_data.localCheckpoint(eager=False)
+    # Lazy localCheckpoint: the k-calibration broadcast materializes it as
+    # part of its own job, saving the dedicated eager-checkpoint job (~half
+    # the query's bench wall-clock, PERF.md r3); unlike persist() it stays
+    # out of the cache manager (no cross-query plan substitution) and
+    # truncates lineage.
+    gravity_data = gravity_data.localCheckpoint(eager=False)
     k_df = gravity_data.filter(F.col("total_trips").isNotNull()).agg(
         (
             xdsum("total_trips * distance_km * distance_km")

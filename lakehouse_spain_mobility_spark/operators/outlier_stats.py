@@ -1,5 +1,5 @@
-"""The reference's core "typical day" operator: per-group stats, join-back,
-n-sigma outlier rejection, re-aggregation.
+"""The reference's core "typical day" operator: per-group stats, n-sigma
+outlier rejection, re-aggregation.
 
 Reference shape (single-pass CTE v2): ``dags/mitma/new_gold.py:22-86`` —
   stats CTE: GROUP BY keys → AVG, COALESCE(STDDEV_SAMP,0)
@@ -8,16 +8,19 @@ Reference shape (single-pass CTE v2): ``dags/mitma/new_gold.py:22-86`` —
   final GROUP BY: SUM/AVG/COALESCE(STDDEV,0)/COUNT(DISTINCT date)
   (dags/mitma/new_gold.py:68-78)
 
-Scale notes:
-- Implemented with the explicit self-join (not a window) to preserve the
-  reference's oracle-checkable semantics; Catalyst plans both sides of the
-  join from the same shuffle-on-keys, and AQE handles skewed OD pairs.
-- A window variant (``Window.partitionBy(keys)``) computes the same result
-  with ONE shuffle instead of two scans + join; offered as
-  ``sigma_filtered_stats_window`` for the fast path. Both return identical
-  rows thanks to deterministic decimal aggregation.
-- The reference's chunked-by-day_type fallback (dags/mitma/new_gold.py:89-148)
-  is intentionally absent: shuffle partitioning + spill already bound memory.
+Two physical forms of the filtered battery, bit-identical thanks to
+deterministic (weighted) fixed-point aggregation:
+- :func:`sigma_filtered_stats` — the window form: the per-group stats are
+  window aggregates over ONE shuffle on the keys, so the fact is scanned
+  once and the join-back disappears (SURVEY §2 J1). Works for any metric.
+- :func:`sigma_filtered_stats_cube` — pre-aggregates to the (keys, date,
+  value) cube first; wins once a count-shaped metric's cube is much
+  smaller than the fact (``queries/core.py:q_typical_day`` routes on the
+  parquet footer row count).
+:func:`unfiltered_stats` is the reference's degraded no-band path.
+
+The reference's chunked-by-day_type fallback (dags/mitma/new_gold.py:89-148)
+is intentionally absent: shuffle partitioning + spill already bound memory.
 """
 
 from __future__ import annotations
@@ -29,6 +32,9 @@ from pyspark.sql import functions as F
 
 from ..functions.deterministic import (
     spark_dsum_over,
+    spark_wdavg,
+    spark_wdstddev_samp0,
+    spark_wdsum,
     xdavg,
     xdstddev_samp0,
     xdsum,
@@ -42,40 +48,14 @@ def sigma_filtered_stats(
     date_col: str,
     n_sigma: float = 3.0,
 ) -> DataFrame:
-    """Two-level aggregation with n-sigma outlier rejection (join form).
+    """Two-level aggregation with n-sigma outlier rejection, window form:
+    one shuffle on the keys feeds both the stats windows and the final
+    aggregation, and the fact is scanned once (SURVEY §2 J1).
 
     Output columns: keys + total_trips, avg_trips, std_trips,
     num_days_observed — the gold_typical_day_patterns schema
     (dags/mitma/new_gold.py:7-18).
     """
-    keys = list(keys)
-    v = F.col(value_col)
-    stats = df.groupBy(*keys).agg(
-        xdavg(value_col).alias("_mu"),
-        xdstddev_samp0(value_col).alias("_sigma"),
-    )
-    joined = df.join(stats, on=keys)
-    band_lo = F.col("_mu") - n_sigma * F.col("_sigma")
-    band_hi = F.col("_mu") + n_sigma * F.col("_sigma")
-    filtered = joined.filter(v.between(band_lo, band_hi))
-    return filtered.groupBy(*keys).agg(
-        xdsum(value_col).alias("total_trips"),
-        xdavg(value_col).alias("avg_trips"),
-        xdstddev_samp0(value_col).alias("std_trips"),
-        F.countDistinct(F.col(date_col)).cast("int").alias("num_days_observed"),
-    )
-
-
-def sigma_filtered_stats_window(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    date_col: str,
-    n_sigma: float = 3.0,
-) -> DataFrame:
-    """Window-function variant: one shuffle, no self-join — the plan you
-    want at scale (SURVEY §2.4 J1 note). Semantics identical to
-    :func:`sigma_filtered_stats`."""
     keys = list(keys)
     v = F.col(value_col)
     pb = ", ".join(keys)
@@ -106,45 +86,6 @@ def sigma_filtered_stats_window(
     )
 
 
-def sigma_filtered_stats_broadcast(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    date_col: str,
-    n_sigma: float = 3.0,
-) -> DataFrame:
-    """Broadcast join-back variant — the bounded-exchange plan for scale.
-
-    The window form shuffles the ENTIRE fact on the keys (every row
-    crosses the wire so the per-partition sort can run); here nothing
-    fact-sized is ever exchanged: the stats aggregation's map-side
-    partials collapse each input partition to ≤|groups| rows before its
-    (tiny) exchange, the group-level stats table broadcasts back onto an
-    unshuffled second scan, and the final aggregation's partials collapse
-    again to ≤|groups × dates| rows (a fixed cardinality at any corpus
-    size — day_type×hour×zones×dates). Exchange volume is O(|groups|·
-    partitions), not O(|fact|): at sf1 this is the difference between
-    shuffling 60M rows and shuffling a few hundred thousand partials.
-    Semantics identical to the other two forms (deterministic fixed-point
-    aggregation; proven by the shared oracle hash)."""
-    keys = list(keys)
-    v = F.col(value_col)
-    stats = df.groupBy(*keys).agg(
-        xdavg(value_col).alias("_mu"),
-        xdstddev_samp0(value_col).alias("_sigma"),
-    )
-    joined = df.join(F.broadcast(stats), on=keys)
-    band_lo = F.col("_mu") - n_sigma * F.col("_sigma")
-    band_hi = F.col("_mu") + n_sigma * F.col("_sigma")
-    filtered = joined.filter(v.between(band_lo, band_hi))
-    return filtered.groupBy(*keys).agg(
-        xdsum(value_col).alias("total_trips"),
-        xdavg(value_col).alias("avg_trips"),
-        xdstddev_samp0(value_col).alias("std_trips"),
-        F.countDistinct(F.col(date_col)).cast("int").alias("num_days_observed"),
-    )
-
-
 def sigma_filtered_stats_cube(
     df: DataFrame,
     keys: Sequence[str],
@@ -165,24 +106,16 @@ def sigma_filtered_stats_cube(
     date iff some surviving cube row carries it. Bit-identical results,
     proven by the unchanged row-level oracle SQL.
 
-    Why it wins (guide §2.3 aggregate before you shuffle, §6 I/O): the
-    broadcast form scans the fact TWICE (stats pass + join-back pass);
-    here ONE scan feeds a partial aggregation that collapses each input
-    partition to <= |cube| rows before the only exchange, and everything
-    after runs at cube size. Domain assumption, stated honestly: the
-    metric is count-shaped (trip counts per OD/hour — a bounded integer
-    domain), so |cube| = |groups|·|dates|·|values per group| << |fact| at
-    any corpus size (sf10: 100k cube rows vs 10M fact rows). On a
-    continuous metric the cube degenerates to fact grain and this form
-    decays to the window form's full-fact exchange — use ``broadcast``
-    there (kept selectable via q_typical_day(form=...))."""
-    from ..functions.deterministic import (
-        spark_wcount,
-        spark_wdavg,
-        spark_wdstddev_samp0,
-        spark_wdsum,
-    )
-
+    Why it wins at scale (guide §2.3 aggregate before you shuffle): ONE
+    scan feeds a partial aggregation that collapses each input partition
+    to <= |cube| rows before the only exchange, where the window form
+    ships every fact row; everything after runs at cube size. Domain
+    assumption, stated honestly: the metric is count-shaped (trip counts
+    per OD/hour — a bounded integer domain), so |cube| = |groups|·|dates|·
+    |values per group| << |fact| at any corpus size (sf10: 100k cube rows
+    vs 10M fact rows). On a continuous metric the cube degenerates to
+    fact grain and only adds a checkpoint — use :func:`sigma_filtered_stats`
+    there."""
     keys = list(keys)
     v = F.col(value_col)
     # Eager checkpoint: the cube feeds two consumers (the stats aggregation

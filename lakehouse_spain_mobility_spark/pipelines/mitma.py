@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from ..catalog import Warehouse, local_frame
 from ..functions import scalar
 from ..functions.holidays_es import holidays_rows
-from ..operators.outlier_stats import sigma_filtered_stats_window
+from ..operators.outlier_stats import sigma_filtered_stats
 
 BRONZE_TABLE = "bronze_mobility_trips"
 SILVER_TABLE = "silver_mobility_trips"
@@ -168,17 +168,13 @@ def silver_transform(wh: Warehouse, file_date: str) -> int:
     return wh.count_where(SILVER_TABLE, F.col("date") == F.to_date(F.lit(file_date), "yyyyMMdd"))
 
 
-def gold_typical_day(wh: Warehouse, with_outlier_filter: bool = True) -> DataFrame:
-    """Full-refresh gold (K3, dags/mitma/new_gold.py:22-86); the degraded
-    no-filter path (:151-179) behind a flag."""
+def gold_typical_day(wh: Warehouse) -> DataFrame:
+    """Full-refresh gold (K3, dags/mitma/new_gold.py:22-86) in the window
+    form: silver's ``trips`` is a double, so the cube form's count-shaped
+    domain assumption does not hold here."""
     silver = wh.read(SILVER_TABLE)
     keys = ["day_type", "hour_period", "origin_zone", "destination_zone"]
-    if with_outlier_filter:
-        gold = sigma_filtered_stats_window(silver, keys, "trips", "date", n_sigma=3.0)
-    else:
-        from ..operators.outlier_stats import unfiltered_stats
-
-        gold = unfiltered_stats(silver, keys, "trips", "date")
+    gold = sigma_filtered_stats(silver, keys, "trips", "date", n_sigma=3.0)
     wh.create_or_replace(GOLD_TABLE, gold)
     return wh.read(GOLD_TABLE)
 

@@ -26,9 +26,8 @@ from ..functions.deterministic import (
     xdsum,
 )
 from ..operators.outlier_stats import (
-    sigma_filtered_stats_broadcast,
+    sigma_filtered_stats,
     sigma_filtered_stats_cube,
-    sigma_filtered_stats_window,
     unfiltered_stats,
 )
 from . import QuerySpec, register
@@ -86,53 +85,38 @@ _SILVER_SQL = f"""
 _KEYS = ["day_type", "hour_period", "origin_zone", "destination_zone"]
 
 
-# Cube-form crossover: the (keys, date, trips) cube only collapses once the
-# fact is large relative to the count-shaped value domain (|cube| is capped
-# by |groups|·|dates|·|value domain| while the fact keeps growing). Below
-# the crossover cube grain ≈ fact grain and the broadcast two-pass form's
-# zero-fact-exchange plan wins; above it one cube pass beats two fact scans
-# (paired A/B: sf0.1 wash/slightly-worse, sf10 3.72 -> 2.03 s noop).
-# Env-overridable for other metric domains.
-import os as _os
-
-_TD_CUBE_MIN_ROWS_V = int(_os.environ.get("SPARK_GRAFT_TD_CUBE_MIN_ROWS", "1000000"))
+# Cube-form crossover on the events footer row count: the (keys, date,
+# trips) cube only collapses once the fact is large relative to the
+# count-shaped value domain (|cube| is capped by |groups|·|dates|·|value
+# domain| while the fact keeps growing). Warm min/median of build+collect
+# on a 4-core host, window vs cube: 100k rows 1.10/1.33 vs 1.93/2.13 s;
+# 1M rows 3.28/3.96 vs 2.06/2.43 s.
+_TD_CUBE_MIN_ROWS = 1_000_000
 
 
-def q_typical_day(spark: SparkSession, sf_dir: str, form: str | None = None) -> DataFrame:
+def q_typical_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold typical-day patterns with 3σ outlier rejection
     (dags/mitma/new_gold.py:22-86).
 
-    Four interchangeable physical forms — deterministic (weighted)
-    fixed-point aggregation makes them bit-identical, and the oracle SQL
-    keeps the reference's row-level stats-CTE join shape to prove it:
-    - ``cube`` (r11): ONE fact pass — pre-aggregate to the (keys, date,
-      trips) cube (count-shaped metric, so |cube| << |fact| once the
-      domain saturates), then stats/band/re-agg run at cube size with
-      exact weighted moments
-      (``operators/outlier_stats.py:sigma_filtered_stats_cube``; sf10
-      paired A/B 3.72 -> 2.03 s noop);
-    - ``broadcast`` (default r4-r10): bounded-exchange two-pass plan —
-      stats broadcast back onto a second unshuffled scan; the right form
-      below the cube crossover or on a continuous metric
-      (``sigma_filtered_stats_broadcast``);
-    - ``window``: one full-fact shuffle feeds both the stats window and
-      the final aggregation (the round-2 choice);
-    - the plain self-join lives in ``sigma_filtered_stats``.
-
-    ``form=None`` (default) routes cube-vs-broadcast on the parquet
-    FOOTER row count (no job) at the crossover documented above.
+    Routed on the parquet FOOTER row count of ``events`` (no job):
+    - below the crossover, the window form
+      (``operators/outlier_stats.py:sigma_filtered_stats``): one fact
+      scan, one shuffle on the keys;
+    - at or above it, or when the footer is unreadable (the scale-safe
+      branch), the single-pass cube form (``sigma_filtered_stats_cube``):
+      pre-aggregate to the (keys, date, trips) cube, then run the battery
+      at cube size with exact weighted moments.
+    Deterministic (weighted) fixed-point aggregation makes the two
+    bit-identical; the oracle SQL keeps the reference's row-level
+    stats-CTE join shape to prove it.
     """
     from .tables import parquet_num_rows
 
     silver = _events_silver(spark, sf_dir)
-    if form is None:
-        n = parquet_num_rows(sf_dir, "events")
-        form = "cube" if n is not None and n >= _TD_CUBE_MIN_ROWS_V else "broadcast"
-    if form == "cube":
+    n = parquet_num_rows(sf_dir, "events")
+    if n is None or n >= _TD_CUBE_MIN_ROWS:
         return sigma_filtered_stats_cube(silver, _KEYS, "trips", "date", n_sigma=3.0)
-    if form == "broadcast":
-        return sigma_filtered_stats_broadcast(silver, _KEYS, "trips", "date", n_sigma=3.0)
-    return sigma_filtered_stats_window(silver, _KEYS, "trips", "date", n_sigma=3.0)
+    return sigma_filtered_stats(silver, _KEYS, "trips", "date", n_sigma=3.0)
 
 
 _TYPICAL_DAY_SQL = f"""

@@ -521,10 +521,8 @@ _BP_MIN_DOCS = 4
 # this corpus size the inline double-compute overlaps across cores and the
 # checkpoint barrier costs more than it saves (paired A/Bs: sf0.1 5k docs
 # inline wins 0.94 vs 1.59 s; sf10 500k docs checkpoint wins 4.90 vs
-# 5.53 s). Env-overridable for other deployments.
-import os as _os
-
-_BP_CKPT_MIN_DOCS = int(_os.environ.get("SPARK_GRAFT_BP_CKPT_MIN_DOCS", "100000"))
+# 5.53 s).
+_BP_CKPT_MIN_DOCS = 100_000
 
 
 def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,6 +4,8 @@ prune columns, the disjunctive join never degrades to a nested loop."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from lakehouse_spain_mobility_spark.plans import inspect as pi
@@ -57,25 +59,18 @@ def test_gravity_dims_broadcast(spark):
     assert pi.count_nested_loop_joins(df) <= 1
 
 
-def test_typical_day_bounded_exchange_plan(spark):
-    """Broadcast form (r4 default): nothing fact-sized crosses an
-    exchange — the stats aggregation exchanges map-side partials
-    (≤|groups| per input partition), the stats table joins back as a
-    BROADCAST onto an unshuffled scan, and the final aggregation's
-    partials collapse again (the COUNT DISTINCT date rewrite adds a
-    (keys, date)-level exchange, still bounded by |groups × dates|).
-    Exactly three such exchanges, zero sort-merge joins."""
+def test_typical_day_routed_window_plan(spark):
+    """sf0.01 sits below the cube crossover, so the registry routes to the
+    window form: ONE events scan feeds one shuffle on the keys, the
+    per-group stats are Window aggregates (no join-back), zero sort-merge
+    joins."""
     df = REG["typical_day"].build(spark, SF_DIR_ORACLE)
-    assert pi.count_shuffles(df) == 3
-    assert pi.count_broadcast_joins(df) >= 1
+    plan = pi.final_plan(df)
+    scans, _, _ = pi.audit_counts(df)
+    assert scans == 1, plan[:2000]
+    assert re.search(r"\bWindow\b", plan), plan[:2000]
     assert pi.count_sortmerge_joins(df) == 0
     assert pi.has_whole_stage_codegen(df)  # final (AQE-resolved) plan
-    # the window form remains available and bit-identical
-    from lakehouse_spain_mobility_spark.queries.core import q_typical_day
-
-    w = q_typical_day(spark, SF_DIR_ORACLE, form="window")
-    assert pi.count_shuffles(w) == 1
-    assert sorted(map(tuple, w.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_events_scan_prunes_unused_columns(spark):
@@ -749,18 +744,22 @@ def test_dedup_pipeline_array_verification_identical(spark):
     assert got == want
 
 
-def test_typical_day_cube_form_identical(spark):
-    """r11 cube-form contract: the single-pass (keys, date, trips) cube
-    battery with weighted fixed-point moments must return rows BIT-identical
-    to the broadcast two-pass form at any scale (the size routing picks
-    broadcast below the crossover, so small-SF oracle runs never exercise
-    the cube path — this pins it directly)."""
+def test_typical_day_cube_form_identical(spark, monkeypatch):
+    """Size-routing contract: the events footer row count picks the window
+    form below the crossover and the single-pass cube form at or above it
+    or when the footer is unreadable (the scale-safe branch). Small-SF
+    oracle runs only reach the window route, so each route is forced here
+    and the rows must be BIT-identical across all three."""
+    from lakehouse_spain_mobility_spark.queries import tables
     from lakehouse_spain_mobility_spark.queries.core import q_typical_day
 
-    a = sorted(
-        tuple(r) for r in q_typical_day(spark, SF_DIR_ORACLE, form="broadcast").collect()
-    )
-    b = sorted(
-        tuple(r) for r in q_typical_day(spark, SF_DIR_ORACLE, form="cube").collect()
-    )
-    assert a == b and len(a) > 0
+    rows = {}
+    for n_rows, form in ((10, "window"), (10**6, "cube"), (None, "cube")):
+        monkeypatch.setattr(tables, "parquet_num_rows", lambda sf_dir, name, n=n_rows: n)
+        df = q_typical_day(spark, SF_DIR_ORACLE)
+        rows[n_rows] = sorted(tuple(r) for r in df.collect())
+        plan = pi.executed_plan(df)  # final: collect() ran this DataFrame
+        # the cube is an eager localCheckpoint: its consumers scan the RDD
+        assert bool(re.search(r"\bWindow\b", plan)) == (form == "window"), (n_rows, plan[:2000])
+        assert ("Scan ExistingRDD" in plan) == (form == "cube"), (n_rows, plan[:2000])
+    assert rows[10] and rows[10] == rows[10**6] == rows[None]
